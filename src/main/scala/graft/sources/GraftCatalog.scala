@@ -557,6 +557,8 @@ private[sources] class GraftStagedTable(dir: String,
   private def spark: SparkSession = SparkSession.active
   @volatile private var staged: Vector[ManifestTable.FileEntry] =
     Vector.empty
+  /** Table-relative commit directory the write staged into, if any. */
+  @volatile private var stagedDir: Option[String] = None
 
   override def name(): String = s"graft.`$dir`"
   override def schema(): StructType = tableSchema
@@ -569,9 +571,12 @@ private[sources] class GraftStagedTable(dir: String,
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: Dataset[Row], overwrite: Boolean)
-                : Unit =
-              staged = ManifestTable.stageForCreate(spark, dir, data,
-                statsCols, partitionCols, bloomCols)
+                : Unit = {
+              val (rel, files) = ManifestTable.stageForCreate(spark, dir,
+                data, statsCols, partitionCols, bloomCols)
+              stagedDir = Some(rel)
+              staged = files
+            }
           }
       }
     }
@@ -580,16 +585,13 @@ private[sources] class GraftStagedTable(dir: String,
     ManifestTable.publishCreate(spark, dir, tableSchema.json,
       statsCols, partitionCols, bloomCols, staged)
 
-  override def abortStagedChanges(): Unit = {
-    val c = spark.sparkContext.hadoopConfiguration
-    // staged paths are table-relative `data/<commitId>/…` — drop the
-    // whole per-stage commit dirs, leaving no orphan bytes behind
-    staged.map(f => f.path.split('/').take(2).mkString("/")).distinct
-      .foreach { d =>
-        val p = new Path(dir, d)
-        p.getFileSystem(c).delete(p, true)
-      }
-  }
+  override def abortStagedChanges(): Unit =
+    // the one commit dir the write staged into — every byte it left,
+    // never anything it did not write
+    stagedDir.foreach { d =>
+      val p = new Path(dir, d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
 }
 
 object GraftCatalog {

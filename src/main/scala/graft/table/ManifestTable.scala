@@ -84,12 +84,13 @@ import org.apache.spark.sql.types._
   * one partition and touching every file: the decision runs on
   * manifest metadata only, one driver-side pass over |files| entries.
   *
-  * MERGE is the latest-wins CDC shape (the q_cdc_apply relational
-  * form) scoped to the TOUCHED files only: a file is rewritten iff the
-  * source contains at least one key inside its [min, max] bounds for
-  * the merge key (probed by one range join against the broadcast
-  * file-interval table), untouched files carry over to the new
-  * snapshot by reference — at 100 TB the rewrite cost is proportional
+  * MERGE ([[merge]], run by the [[MergeInto]] engine in its
+  * replace-by-key mode) is the latest-wins CDC shape (the q_cdc_apply
+  * relational form) scoped to the TOUCHED files only: a file is
+  * rewritten iff the source contains at least one key inside its
+  * [min, max] bounds for the merge key (probed by one range join
+  * against the broadcast file-interval table), untouched files carry
+  * over to the new snapshot by reference — at 100 TB the rewrite cost is proportional
   * to the touched data, not the table. The rewrite itself is a
   * broadcast ANTI join (touched rows whose key appears in the source
   * are dropped, source winners appended) — the table side is never
@@ -378,14 +379,6 @@ object ManifestTable {
   private[graft] def clearSnapshotCache(): Unit = snapshotCache.clear()
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Merge sources at or under this row count are BROADCAST to the
-    * rewrite join (the table side then never shuffles — the CDC fast
-    * path); above it the join degrades to a plain shuffle join with
-    * identical semantics instead of OOMing the driver on a bulk
-    * source. ~4M keyed rows is comfortably inside Spark's default 8GB
-    * broadcast-table hard cap for typical row widths. */
-  private[table] val MaxBroadcastSourceRows = 4L * 1000 * 1000
 
   private def logPath(dir: String) = new Path(dir, LogDir)
   private def deltaName(v: Long) = f"v$v%020d.json"
@@ -1311,11 +1304,14 @@ object ManifestTable {
   /** Staged files swept executor-side (spec hook for the routing law). */
   private[graft] val sweepDistributedFiles = new java.util.concurrent.atomic.AtomicLong
 
+  private def newCommitDir(): String = s"$DataDir/${UUID.randomUUID()}"
+
   private[table] def stage(spark: SparkSession, dir: String, df: DataFrame,
       statsCols: Seq[String], partitionCols: Seq[String],
-      bloomCols: Seq[String] = Nil): Vector[FileEntry] = {
-    val commitId = UUID.randomUUID().toString
-    val rel = s"$DataDir/$commitId"
+      bloomCols: Seq[String] = Nil,
+      /** Table-relative commit directory the files land in (fresh per
+        * call unless the caller must know it beforehand). */
+      rel: String = newCommitDir()): Vector[FileEntry] = {
     val abs = new Path(dir, rel)
     // parquet-NATIVE bloom filters: the writer builds them while it
     // writes (no extra data pass); they live in the footer and are
@@ -1809,16 +1805,19 @@ object ManifestTable {
     * not exist until [[publishCreate]] commits version 0 listing them,
     * so CTAS pays ONE commit instead of create-empty + append (two
     * commits, two footer sweeps, one read-back). Identical building
-    * blocks to [[create]], just split at the stage/publish seam. */
+    * blocks to [[create]], just split at the stage/publish seam.
+    * Returns the table-relative commit directory it wrote — exactly
+    * what an abort must delete — with the staged files. */
   private[graft] def stageForCreate(spark: SparkSession, dir: String,
       df: DataFrame, statsCols: Seq[String], partitionCols: Seq[String],
-      bloomCols: Seq[String]): Vector[FileEntry] = {
+      bloomCols: Seq[String]): (String, Vector[FileEntry]) = {
     require(latestVersion(spark, dir).isEmpty,
       s"table already exists at $dir — use append/overwrite/merge")
     (statsCols ++ partitionCols ++ bloomCols).foreach { c =>
       require(df.schema.fieldNames.contains(c), s"column $c not in schema")
     }
-    stage(spark, dir, df, statsCols, partitionCols, bloomCols)
+    val rel = newCommitDir()
+    (rel, stage(spark, dir, df, statsCols, partitionCols, bloomCols, rel))
   }
 
   /** Phase 2 of the staged CTAS: publish version 0 over files staged by
@@ -3058,22 +3057,27 @@ object ManifestTable {
   // --------------------------------------------------------- merge
 
   /** MERGE `source` into the table on `key`: latest-wins upsert, with
-    * rows whose `opCol` (if any) equals 'D' deleted. Only files holding
-    * at least one source key (by manifest [min, max] bounds on `key` —
-    * footer stats or partition values) are rewritten; the rest carry
-    * over by reference. The rewrite is a broadcast ANTI join: touched
-    * base rows whose key appears in the source are replaced, all other
+    * rows whose `opCol` (if any) equals 'D' deleted. This resolves the
+    * CDC source and runs it through the one MERGE engine, [[MergeInto]],
+    * as the program `WHEN MATCHED AND op = 'D' THEN DELETE / WHEN
+    * MATCHED THEN UPDATE SET * / WHEN NOT MATCHED AND op <> 'D' THEN
+    * INSERT *` in its replace-by-key mode: every base row sharing a
+    * source key is replaced by that key's one winner, and all other
     * base rows pass through UNCHANGED (pre-existing duplicate or
     * null-key base rows are preserved verbatim — only keys present in
-    * the source are resolved).
+    * the source are resolved). Only files whose manifest [min, max]
+    * bounds on `key` admit a source key are rewritten — touched rows
+    * anti-joined on the source keys, unioned with the winners, one
+    * staged write; the rest carry over by reference. The merge commits
+    * even when it stages nothing.
     *
     * '''Source key contract''': at most one row per key. Without
     * `seqCol` a duplicate-key source FAILS LOUDLY (raise_error inside
     * the merge job — no partial commit). With `seqCol` the highest
     * sequence wins deterministically (ties broken by a stable hash of
-    * the row). Null-key source rows are dropped. Content-idempotent:
-    * replaying the same source yields a byte-different but
-    * value-identical table.
+    * the row). Null-key source rows are dropped; a NULL op deletes like
+    * 'D'. Content-idempotent: replaying the same source yields a
+    * byte-different but value-identical table.
     *
     * Concurrency: losing the version race auto-rebases when the
     * concurrent commit provably commutes — it kept every file this
@@ -3084,8 +3088,8 @@ object ManifestTable {
     * re-reads and re-runs. */
   def merge(spark: SparkSession, dir: String, source: DataFrame, key: String,
       opCol: Option[String] = None, seqCol: Option[String] = None): Snapshot =
-    mergeImpl(spark, dir, current(spark, dir), source, key, opCol, seqCol,
-      "merge", None)
+    cdcMerge(spark, dir, current(spark, dir), source, key, opCol, seqCol,
+      "merge", None, None)
 
   /** MERGE prepared against an explicit snapshot `version` — the manual
     * optimistic-transaction form of [[merge]]: the rewrite is computed
@@ -3095,8 +3099,8 @@ object ManifestTable {
   def mergeAt(spark: SparkSession, dir: String, version: Long,
       source: DataFrame, key: String, opCol: Option[String] = None,
       seqCol: Option[String] = None): Snapshot =
-    mergeImpl(spark, dir, readManifest(spark, dir, version), source, key,
-      opCol, seqCol, "merge", None)
+    cdcMerge(spark, dir, readManifest(spark, dir, version), source, key,
+      opCol, seqCol, "merge", None, None)
 
   /** Exactly-once MERGE for streaming writers: the micro-batch id is
     * recorded BOTH in the snapshot's operation (`merge@batch=<id>`)
@@ -3115,26 +3119,22 @@ object ManifestTable {
     val head = current(spark, dir)
     val mark = replayMark(head, txnId, batchId, "merge")
     if (batchId <= mark) head
-    else mergeImpl(spark, dir, head, source, key, opCol, seqCol,
+    else cdcMerge(spark, dir, head, source, key, opCol, seqCol,
       s"merge@batch=$batchId", Some(batchId), txnId)
   }
 
-  private[table] def mergeImpl(spark: SparkSession, dir: String,
-      head: Snapshot, source: DataFrame, key: String, opCol: Option[String],
-      seqCol: Option[String], operation: String,
-      batchId: Option[Long], txnId: Option[String] = None): Snapshot = {
-    val schema = head.schema
-    val cols = schema.fieldNames.toSeq
+  /** Resolves a CDC source to one row per key — null keys dropped, then
+    * the `seqCol` winner or a loud failure on a duplicate key — with its
+    * op as `__op`, and merges it into `head` through [[MergeInto]]. */
+  private def cdcMerge(spark: SparkSession, dir: String, head: Snapshot,
+      source: DataFrame, key: String, opCol: Option[String],
+      seqCol: Option[String], operation: String, batchId: Option[Long],
+      txnId: Option[String]): Snapshot = {
+    import MergeInto.{Delete, InsertAll, UpdateAll, WhenMatched, WhenNotMatched}
+    val cols = head.schema.fieldNames.toSeq
     require(cols.contains(key), s"merge key $key not in table schema")
-
-    // Resolve the source ONCE — a single key-partitioned window pass
-    // (the only shuffle the source ever takes), cached; the pruning
-    // probe, the anti-join key set and the winner rows are all derived
-    // from this cache. One row per key with its resolved _op.
-    val obs = org.apache.spark.sql.Observation()
-    val srcOp = opCol.map(col).getOrElse(lit("U"))
     val src0 = source.where(col(key).isNotNull)
-    val cached = (seqCol match {
+    val resolved = (seqCol match {
       case Some(sc) =>
         val w = Window.partitionBy(key)
           .orderBy(col(sc).desc, xxhash64(cols.map(col): _*).asc)
@@ -3147,177 +3147,14 @@ object ManifestTable {
             lit(s"merge: duplicate source rows for $key="),
             col(key).cast("string"),
             lit(" — pre-compact or pass seqCol")))).otherwise(lit(true)))
-    }).select(cols.map(col) :+ srcOp.as("__op"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size gate on the broadcast: a CDC-sized source broadcasts (the
-    // table side then never shuffles); a bulk source above the gate
-    // falls back to a plain shuffle join — identical semantics, and no
-    // driver/executor OOM from materializing a huge source. The count
-    // RIDES the pruning probe via an observe node ABOVE the cache point
-    // (metrics inside a cached subplan never report) — no separate
-    // count() job; only a probe-less merge pays an explicit pass.
-    // the source-key RANGE rides the same observe as the row count:
-    // the rebase-conflict test then costs zero extra jobs (previously a
-    // separate one-row aggregate pass over the cached source)
-    val keyType = schema(key).dataType
-    val rangeAggs = keyProbe(keyType).toSeq.flatMap { case (_, norm) =>
-      Seq(min(norm(col(key))).as("lo"), max(norm(col(key))).as("hi")) }
-    val resolved = cached.observe(obs,
-      count(lit(1)).as("rows"), rangeAggs: _*)
-    var observed = false
-    lazy val srcRows: Long = observedRows(observed, obs, cached)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (srcRows <= MaxBroadcastSourceRows) broadcast(df) else df
-    try {
-      // Per-file pruning probe: a file is touched iff at least one
-      // source key falls inside its [min, max] bounds on the merge key
-      // (footer stats, or the exact partition value when the table is
-      // partitioned on the key; files without bounds are always
-      // touched). The probe is one range join of the source keys
-      // against the BROADCAST file-interval table (metadata-sized: one
-      // row per data file) aggregated down to ≤ |files| ints at the
-      // driver — strictly tighter than a single [lo, hi] interval,
-      // which a changelog with one far-away key (the
-      // append-plus-update batch shape) would blow up to the whole
-      // table.
-      val statFiles = head.files.zipWithIndex.flatMap { case (fe, i) =>
-        fileBounds(fe, schema, key).flatMap { case (mn, mx) =>
-          keyProbe(keyType).map { case (t, _) => (i, mn, mx, t) }
-        }
-      }
-      val touchedIdx: Set[Int] =
-        if (statFiles.isEmpty) Set.empty
-        else {
-          val t = statFiles.head._4
-          val ivalSchema = StructType(Seq(
-            StructField("__fi", IntegerType), StructField("__mn", t),
-            StructField("__mx", t)))
-          val rows = statFiles.map { case (i, mn, mx, _) =>
-            Row(i, primExternal(mn, t), primExternal(mx, t))
-          }
-          val ivals = spark.createDataFrame(rows.asJava, ivalSchema)
-          val kexpr = keyProbe(keyType).get._2(col(key))
-          val idx = resolved.select(kexpr.as("__k"))
-            .join(broadcast(ivals),
-              col("__k") >= col("__mn") && col("__k") <= col("__mx"))
-            .select("__fi").distinct().collect().map(_.getInt(0)).toSet
-          observed = true // the probe's full pass set the observe metric
-          idx
-        }
-      val boundedIdx = statFiles.map(_._1).toSet
-      val touched = head.files.zipWithIndex.collect {
-        case (f, i) if !boundedIdx(i) || touchedIdx(i) => f
-      }
-
-      // Rewrite = broadcast ANTI join (touched rows whose key appears
-      // in the source are dropped) ∪ non-delete winners. The table
-      // side is never shuffled, and the output is coalesced back to
-      // touched-file granularity so a merge PRESERVES the table's file
-      // layout instead of splintering it (and the footer sweep stays
-      // proportional to touched files).
-      val winners = resolved.where(col("__op") =!= "D").select(cols.map(col): _*)
-      // only the NEW rows need checking — touched base rows conformed
-      // at their own commit and pass through byte-identical
-      enforce(winners, head.constraints, operation)
-      val srcKeys = resolved.select(col(key))
-      val base = scanWith(spark, dir, touched, schema, head.dvs,
-        head.renames)
-      val rewritten = base
-        .join(maybeBroadcast(srcKeys), Seq(key), "left_anti")
-        .unionByName(winners)
-        .coalesce(math.max(touched.size, 1))
-
-      val staged =
-        if (touched.isEmpty && srcRows == 0) Vector.empty
-        else stage(spark, dir, rewritten, head.statsCols,
-          head.partitionCols, head.bloomCols)
-      // Rebase conflict test for concurrently ADDED files: overlap with
-      // the source key range ⇒ the other commit may have landed rows
-      // for keys this merge also resolved — interleaving them would
-      // leave duplicate keys, so fail loudly. Lazily priced: the
-      // happy path (no race) never runs the one-row range aggregate.
-      // Outer None = key type unboundable (every added file conflicts);
-      // inner None = empty source (nothing can conflict). The range
-      // normally arrives via the probe's observe metrics (zero extra
-      // jobs); the explicit aggregate only runs when the observation
-      // was never set (probe-less merge / AQE empty-relation replan).
-      lazy val srcRange: Option[Option[(Any, Any)]] =
-        keyProbe(keyType).map { case (_, norm) =>
-          observedMetrics(observed, obs) match {
-            case Some(m) =>
-              m.get("lo") match {
-                case Some(null) | None => None // empty source
-                case Some(lo) => Some((lo, m("hi")))
-              }
-            case None =>
-              val r = resolved.agg(min(norm(col(key))).as("lo"),
-                max(norm(col(key))).as("hi")).head()
-              if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
-          }
-        }
-      val conflicts: FileEntry => Boolean = f => srcRange match {
-        case None => true // unboundable key type: conservative
-        case Some(None) => false // empty source: no keys to collide with
-        case Some(Some((lo, hi))) => fileBounds(f, schema, key) match {
-          case None => true // unbounded file: conservative
-          case Some((mn, mx)) =>
-            !primLt(mx, lo) && !primLt(hi, mn) // ranges intersect
-        }
-      }
-      commitRewrite(spark, dir, head, operation,
-        touched.map(_.path).toSet, staged, conflicts, batchId, txnId)
-    } finally {
-      cached.unpersist()
-    }
-  }
-
-  /** The merge source's row count, preferring the observe metric the
-    * pruning probe already paid for (one pass fills the cache AND
-    * answers the broadcast gate) over a separate count() job. The
-    * fallback is load-bearing, not defensive: when the probe's result
-    * is EMPTY, AQE replans the finished stage into an empty local
-    * relation, the CollectMetricsExec vanishes from the final adaptive
-    * plan, and the ObservationManager completes the observation with
-    * Row.empty — so an absent metric falls back to one count() over
-    * the ALREADY-CACHED source (the pre-observe cost, never worse). */
-  private[table] def observedRows(observed: Boolean,
-      obs: org.apache.spark.sql.Observation, cached: DataFrame): Long =
-    observedMetrics(observed, obs).flatMap(_.get("rows")) match {
-      case Some(n: Long) => n
-      case _ => cached.count()
-    }
-
-  /** The probe's observe metrics, or None when the observation never
-    * fired / completed empty (probe-less path, or AQE replanned the
-    * empty probe into a local relation and dropped CollectMetricsExec —
-    * see [[observedRows]]). Blocks until the listener fires when the
-    * probe DID run. */
-  private[table] def observedMetrics(observed: Boolean,
-      obs: org.apache.spark.sql.Observation): Option[Map[String, Any]] =
-    if (!observed) None
-    else Some(obs.get).filter(_.get("rows").exists(_.isInstanceOf[Long]))
-
-  /** Probe-side type plan for the merge key: the Spark column type the
-    * interval frame uses, and how to normalize the source key onto it.
-    * None ⇒ the key type can't be probed (every stat-bearing file is
-    * treated as touched — correct, just unpruned). */
-  private[table] def keyProbe(dt: DataType): Option[(DataType, Column => Column)] =
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some((LongType, _.cast("long")))
-      case FloatType | DoubleType => Some((DoubleType, _.cast("double")))
-      case StringType => Some((StringType, identity[Column] _))
-      case DateType => Some((LongType, c => unix_date(c).cast("long")))
-      case TimestampType => Some((LongType, c => unix_micros(c)))
-      case _ => None
-    }
-
-  /** Pruning primitive → external row value for the interval frame. */
-  private[table] def primExternal(v: Any, t: DataType): Any = (v, t) match {
-    case (x: Long, LongType) => x
-    case (x: Double, DoubleType) => x
-    case (x: String, StringType) => x
-    case _ => sys.error(s"merge probe: $v is not a $t")
+    }).select(cols.map(col) :+ opCol.map(c => coalesce(col(c), lit("D")))
+      .getOrElse(lit("U")).as("__op"): _*)
+    MergeInto.run(spark, dir, head, resolved, Seq(key),
+      matched = Seq(WhenMatched(Delete, Some(MergeInto.src("__op") === "D")),
+        WhenMatched(UpdateAll)),
+      notMatched = Seq(WhenNotMatched(InsertAll, Some(col("__op") =!= "D"))),
+      notMatchedBySource = Nil, schemaEvolution = false,
+      replaceByKey = true, operation, batchId, txnId)
   }
 
   // ----------------------------------------------------------- dml

@@ -3,16 +3,17 @@ package graft.table
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types._
 
 import ManifestTable.{FileEntry, Snapshot}
 
-/** Standard SQL MERGE INTO over a [[ManifestTable]]: composite join
+/** The one MERGE engine of a [[ManifestTable]]: SQL MERGE INTO and the
+  * CDC upsert ([[ManifestTable.merge]]) both run here. Composite join
   * keys, an ordered `WHEN MATCHED [AND <cond>] THEN UPDATE/DELETE`
-  * clause list and `WHEN NOT MATCHED [AND <cond>] THEN INSERT` — the
-  * full MERGE matrix a user migrating from any lakehouse engine
-  * expects, on top of the same touched-files-only commit protocol as
-  * the CDC-shaped [[ManifestTable.merge]].
+  * clause list, `WHEN NOT MATCHED [AND <cond>] THEN INSERT` and `WHEN
+  * NOT MATCHED BY SOURCE` — the full MERGE matrix a user migrating from
+  * any lakehouse engine expects — committed by rewriting touched files
+  * only.
   *
   * Semantics (ANSI MERGE):
   *   - a target row with a matching source row takes the FIRST matched
@@ -28,16 +29,32 @@ import ManifestTable.{FileEntry, Snapshot}
   *     source keys that match nothing insert independently, exactly as
   *     running the INSERT branch per row would.
   *
-  * Scale shape, same discipline as the single-key merge: files are
-  * pruned by a PER-COLUMN interval-intersection probe (a file is
-  * touched iff some source row falls inside its [min,max] bounds on
-  * EVERY probed key column — one broadcast range join against the
-  * metadata-sized file-interval table), the touched side is rewritten
-  * with one broadcast left join (the table side never shuffles), and
-  * untouched files carry over by reference. INSERT-only merges rewrite
-  * nothing at all — they stage just the new rows. Version races rebase
-  * through [[ManifestTable.commitRewrite]] with per-column range
-  * intersection as the conflict test.
+  * Replace-by-key mode (the CDC contract of [[ManifestTable.merge]]):
+  * the source holds one row per key, and each source key replaces
+  * EVERY target row sharing it — duplicate-key target rows included —
+  * by that one row, or by nothing when its clauses delete it. The
+  * clauses may only be `UPDATE SET *`, `DELETE` and `INSERT *`, and on
+  * every source row the matched and not-matched clauses must agree
+  * (UPDATE SET * exactly when INSERT *; a disagreement fails loudly),
+  * so a row's outcome never depends on whether its key matched. The
+  * rewrite therefore needs no match at all: touched files anti-joined
+  * on the source keys, unioned with the rows that land, in one staged
+  * write. A replace-by-key merge commits even when it stages nothing —
+  * streaming writers advance their batch mark through that commit —
+  * while an ANSI merge with nothing to rewrite or insert commits
+  * nothing.
+  *
+  * Scale shape, both modes: files are pruned by a PER-COLUMN
+  * interval-intersection probe (a file is touched iff some source row
+  * falls inside its [min,max] bounds on EVERY probed key column — one
+  * broadcast range join against the metadata-sized file-interval
+  * table), the touched side is rewritten with one broadcast join (the
+  * table side never shuffles; a bulk source above
+  * [[MaxBroadcastSourceRows]] shuffles instead), and untouched files
+  * carry over by reference. INSERT-only merges rewrite nothing at all —
+  * they stage just the new rows. Version races rebase through
+  * [[ManifestTable.commitRewrite]] with per-column range intersection
+  * as the conflict test.
   */
 object MergeInto {
 
@@ -77,6 +94,14 @@ object MergeInto {
 
   private val SrcStruct = "__src"
 
+  /** Merge sources at or under this row count are BROADCAST to the
+    * rewrite join (the table side then never shuffles — the CDC fast
+    * path); above it the join degrades to a plain shuffle join with
+    * identical semantics instead of OOMing the driver on a bulk
+    * source. ~4M keyed rows is comfortably inside Spark's default 8GB
+    * broadcast-table hard cap for typical row widths. */
+  private val MaxBroadcastSourceRows = 4L * 1000 * 1000
+
   /** Merges whose insert set was derived from the rewrite pass's OWN
     * observe — i.e. the touched files were scanned exactly once (spec
     * hook for the single-pass law). */
@@ -99,8 +124,22 @@ object MergeInto {
         * ONLY: a type conflict on an existing column, or a source
         * column whose name is tombstoned (dropped / renamed away),
         * fails loudly before anything stages. */
-      schemaEvolution: Boolean = false): Snapshot = {
-    val head = ManifestTable.current(spark, dir)
+      schemaEvolution: Boolean = false): Snapshot =
+    run(spark, dir, ManifestTable.current(spark, dir), source, keys,
+      matched, notMatched, notMatchedBySource, schemaEvolution,
+      replaceByKey = false, "merge-into", None, None)
+
+  /** The engine. `head` is the snapshot the merge is computed against
+    * (the commit rebases onto the live head under the conflict test);
+    * `operation`, `batchId` and `txnId` go to the commit record as in
+    * [[ManifestTable.commitRewrite]]. `replaceByKey` selects the CDC
+    * mode described on [[MergeInto]]. */
+  private[table] def run(spark: SparkSession, dir: String, head: Snapshot,
+      source: DataFrame, keys: Seq[String], matched: Seq[WhenMatched],
+      notMatched: Seq[WhenNotMatched],
+      notMatchedBySource: Seq[WhenNotMatchedBySource],
+      schemaEvolution: Boolean, replaceByKey: Boolean, operation: String,
+      batchId: Option[Long], txnId: Option[String]): Snapshot = {
     val tableSchema = head.schema
     val newFields: Seq[StructField] =
       if (!schemaEvolution) Nil
@@ -138,6 +177,11 @@ object MergeInto {
     }
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "mergeInto: at least one WHEN clause")
+    if (replaceByKey) require(notMatchedBySource.isEmpty &&
+      matched.forall(m => m.action == UpdateAll || m.action == Delete) &&
+      notMatched.forall(_.action == InsertAll),
+      "mergeInto: replace-by-key takes only UPDATE SET *, DELETE and " +
+        "INSERT * clauses")
     notMatchedBySource.foreach {
       case WhenNotMatchedBySource(UpdateAll, _) =>
         throw new IllegalArgumentException(
@@ -167,45 +211,42 @@ object MergeInto {
       case _ => ()
     }
 
-    // one source-side window pass: the per-composite-key match count
-    // feeds the cardinality guard (the only shuffle the source takes)
-    val dupW = Window.partitionBy(keys.map(col): _*)
+    // an ANSI source takes one window pass: the per-composite-key match
+    // count feeds the cardinality guard (the only shuffle the source
+    // takes); a replace-by-key source is already one row per key
     val obs = org.apache.spark.sql.Observation()
-    val cached = source.withColumn("__dup", count(lit(1)).over(dupW))
+    val cached = (if (replaceByKey) source
+      else source.withColumn("__dup",
+        count(lit(1)).over(Window.partitionBy(keys.map(col): _*))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size gate, same as ManifestTable.merge: a CDC-sized source
-    // broadcasts (table side never shuffles); a bulk source falls back
-    // to a shuffle join — identical semantics, no driver OOM. The row
-    // count rides the pruning probe through an observe node ABOVE the
-    // cache point (metrics inside a cached subplan never report) — no
-    // separate count() job; only a probe-less merge pays an explicit
-    // pass.
+    // size gate: a CDC-sized source broadcasts (table side never
+    // shuffles); a bulk source falls back to a shuffle join — identical
+    // semantics, no driver OOM. The row count rides the pruning probe
+    // through an observe node ABOVE the cache point (metrics inside a
+    // cached subplan never report) — no separate count() job; only a
+    // probe-less merge pays an explicit pass.
     // per-key source RANGES ride the same observe as the row count: the
     // rebase-conflict test then costs zero extra jobs (previously a
     // separate one-row aggregate pass over the cached source)
-    val probedKeys = keys.flatMap { k =>
-      ManifestTable.keyProbe(schema(k).dataType)
-        .map { case (t, norm) => (k, t, norm) }
+    val probed = keys.flatMap { k =>
+      keyProbe(schema(k).dataType).map { case (t, norm) => (k, t, norm) }
     }
-    val rangeAggs = probedKeys.zipWithIndex.flatMap { case ((k, _, norm), j) =>
+    val rangeAggs = probed.zipWithIndex.flatMap { case ((k, _, norm), j) =>
       Seq(min(norm(col(k))).as(s"lo$j"), max(norm(col(k))).as(s"hi$j")) }
     val resolved = cached.observe(obs,
       count(lit(1)).as("rows"), rangeAggs: _*)
     var observed = false
     // fallback is load-bearing: an EMPTY probe result makes AQE replan
     // the stage into an empty relation, dropping the CollectMetricsExec
-    // — see ManifestTable.observedRows
-    lazy val srcRows: Long = ManifestTable.observedRows(observed, obs, cached)
+    // — see observedRows
+    lazy val srcRows: Long = observedRows(observed, obs, cached)
     def maybeBroadcast(df: DataFrame): DataFrame =
-      if (srcRows <= ManifestTable.MaxBroadcastSourceRows) broadcast(df)
-      else df
+      if (srcRows <= MaxBroadcastSourceRows) broadcast(df) else df
     try {
       // ---- per-column interval-intersection pruning probe ----
-      val probed = probedKeys
-      val fileBoundsFor = (f: FileEntry) =>
-        probed.map { case (k, _, _) => ManifestTable.fileBounds(f, schema, k) }
       val statFiles = head.files.zipWithIndex.flatMap { case (f, i) =>
-        val bs = fileBoundsFor(f)
+        val bs = probed.map { case (k, _, _) =>
+          ManifestTable.fileBounds(f, schema, k) }
         if (probed.isEmpty || bs.forall(_.isEmpty)) None else Some((i, bs))
       }
       val touchedIdx: Set[Int] =
@@ -217,8 +258,8 @@ object MergeInto {
           val rows = statFiles.map { case (i, bs) =>
             Row.fromSeq(i +: bs.zip(probed).flatMap { case (b, (_, t, _)) =>
               b match {
-                case Some((mn, mx)) => Seq(ManifestTable.primExternal(mn, t),
-                  ManifestTable.primExternal(mx, t))
+                case Some((mn, mx)) => Seq(primExternal(mn, t),
+                  primExternal(mx, t))
                 case None => Seq(null, null)
               }
             })
@@ -255,98 +296,67 @@ object MergeInto {
           bySourcePaths(f.path) => f
       }
 
-      val base = ManifestTable.scanWith(spark, dir, touched, schema,
-        head.dvs, head.renames)
-      val srcKeyed = resolved.select(keys.map(col) ++ Seq(
-        struct(srcCols.map(col): _*).as(SrcStruct), col("__dup")): _*)
-      val isMatched = col(SrcStruct).isNotNull
-      val clauseIdx = matched.zipWithIndex.foldRight(lit(-1)) {
-        case ((cl, i), els) =>
-          when(cl.condition.map(c => coalesce(c, lit(false)))
-            .getOrElse(lit(true)), lit(i)).otherwise(els)
+      // rebase conflict: a concurrently ADDED file conflicts unless
+      // PROVABLY disjoint from the source key range on some column
+      // (lazily priced: the happy path never needs the ranges)
+      lazy val srcRanges: Seq[Option[(Any, Any)]] =
+        if (probed.isEmpty) Nil
+        else observedMetrics(observed, obs) match {
+          // the probe pass already aggregated the ranges (zero extra
+          // jobs); null lo = empty source on that column
+          case Some(m) => probed.indices.map { j =>
+            m.get(s"lo$j") match {
+              case Some(null) | None => None
+              case Some(lo) => Some((lo, m(s"hi$j")))
+            }
+          }
+          case None =>
+            val r = cached.agg(rangeAggs.head, rangeAggs.tail: _*).head()
+            probed.indices.map { j =>
+              if (r.isNullAt(2 * j)) None
+              else Some((r.get(2 * j), r.get(2 * j + 1)))
+            }
+        }
+      // a concurrently added file also conflicts when a BY SOURCE
+      // clause may touch rows in it (unconditional ⇒ always)
+      val bySourceConflicts: FileEntry => Boolean =
+        if (notMatchedBySource.isEmpty) _ => false
+        else if (notMatchedBySource.exists(_.condition.isEmpty)) _ => true
+        else {
+          val e = org.apache.spark.sql.GraftSqlBridge.expr(bySourceOr.get)
+          f => ManifestTable.mayMatch(f, schema, e)
+        }
+      val conflicts: FileEntry => Boolean = f => bySourceConflicts(f) || {
+        if (probed.isEmpty) true
+        else if (srcRanges.forall(_.isEmpty)) false // empty source
+        else !probed.zipWithIndex.exists { case ((k, _, _), j) =>
+          (ManifestTable.fileBounds(f, schema, k), srcRanges(j)) match {
+            case (Some((mn, mx)), Some((lo, hi))) =>
+              ManifestTable.primLt(mx, lo) || ManifestTable.primLt(hi, mn)
+            case _ => false // unknown on this column: can't prove disjoint
+          }
+        }
       }
+      def commit(removed: Set[String], staged: Vector[FileEntry]): Snapshot =
+        ManifestTable.commitRewrite(spark, dir, head, operation,
+          removed, staged, conflicts, batchId, txnId,
+          schemaJson = if (newFields.isEmpty) None else Some(schema.json))
+      def stage(df: DataFrame): Vector[FileEntry] = ManifestTable.stage(
+        spark, dir, df, head.statsCols, head.partitionCols, head.bloomCols)
+
+      // clause dispatch: the index of the first clause whose condition
+      // holds, -1 when none does
+      def firstHolding(conds: Seq[Option[Column]]): Column =
+        conds.zipWithIndex.foldRight(lit(-1)) { case ((c, i), els) =>
+          when(c.map(coalesce(_, lit(false))).getOrElse(lit(true)), lit(i))
+            .otherwise(els)
+        }
+      val clauseIdx = firstHolding(matched.map(_.condition))
       val deleteIdx = matched.zipWithIndex.collect {
         case (WhenMatched(Delete, _), i) => i }
       val updateIdx = matched.zipWithIndex.collect {
         case (WhenMatched(UpdateAll | Update(_), _), i) => i }
-      val bsClauseIdx = notMatchedBySource.zipWithIndex.foldRight(lit(-1)) {
-        case ((cl, i), els) =>
-          when(cl.condition.map(c => coalesce(c, lit(false)))
-            .getOrElse(lit(true)), lit(i)).otherwise(els)
-      }
-      val bsDeleteIdx = notMatchedBySource.zipWithIndex.collect {
-        case (WhenNotMatchedBySource(Delete, _), i) => i }
-      val bsUpdateIdx = notMatchedBySource.zipWithIndex.collect {
-        case (WhenNotMatchedBySource(Update(_), _), i) => i }
-      def valueOf(c: String): Column = {
-        val afterBySource = notMatchedBySource.zipWithIndex
-          .foldRight(col(c)) { case ((cl, i), els) =>
-            cl.action match {
-              case Update(set) if set.contains(c) =>
-                when(col("__s") === i,
-                  set(c).cast(schema(c).dataType)).otherwise(els)
-              case _ => els
-            }
-          }
-        matched.zipWithIndex.foldRight(afterBySource) { case ((cl, i), els) =>
-          cl.action match {
-            case UpdateAll =>
-              when(col("__m") === i,
-                src(c).cast(schema(c).dataType)).otherwise(els)
-            case Update(set) if set.contains(c) =>
-              when(col("__m") === i,
-                set(c).cast(schema(c).dataType)).otherwise(els)
-            case _ => els
-          }
-        }
-      }
-      // cardinality guard rides the join: evaluated on every matched
-      // row, throws only when a duplicate source key actually matched
-      val guard = when(isMatched && col("__dup") > 1,
-        raise_error(concat(
-          lit("mergeInto: multiple source rows match target key ("),
-          concat_ws(",", keys.map(c => col(c).cast("string")): _*),
-          lit(") — deduplicate the source")))).otherwise(lit(true))
-      val joined0 = base.join(maybeBroadcast(srcKeyed), keys, "left")
-        .withColumn("__m", when(isMatched, clauseIdx).otherwise(lit(-1)))
-        .withColumn("__s", when(!isMatched, bsClauseIdx).otherwise(lit(-1)))
-        .where(guard)
-      // Single-pass rewrite+insert: the rewrite join above already reads
-      // every touched row, so the set of source keys that MATCHED rides
-      // the rewrite's own write job through a second observe (collect_set
-      // of the key tuple — bounded by the matched subset of the source,
-      // which the broadcast gate already materializes driver-side), and
-      // inserts are derived from the CACHED source anti-joined against
-      // that local key set — the touched files are never scanned a second
-      // time. Gated to the broadcast-sized source (a bulk source must not
-      // collect_set through the driver; its shuffle-join shape keeps the
-      // key-column anti-join) and to constraint-free tables (enforcement
-      // must keep its nothing-staged-on-violation ordering, which needs
-      // the insert frame BEFORE staging).
-      val rewriteNeeded = (matched.nonEmpty ||
-        notMatchedBySource.nonEmpty) && touched.nonEmpty
-      val singlePass = rewriteNeeded && notMatched.nonEmpty &&
-        head.constraints.isEmpty &&
-        srcRows <= ManifestTable.MaxBroadcastSourceRows
-      val mkObs = org.apache.spark.sql.Observation()
-      val joined = if (singlePass)
-        joined0.observe(mkObs, collect_set(when(isMatched,
-          struct(keys.map(col): _*))).as("__mk"))
-      else joined0
-      val allDeletes = deleteIdx.map(i => col("__m") === i) ++
-        bsDeleteIdx.map(i => col("__s") === i)
-      val rewritten0 = allDeletes.reduceOption(_ || _)
-        .fold(joined)(d => joined.where(!d))
-        .select(cols.map(c => valueOf(c).as(c)): _*)
-
-      // inserts: source rows matching NO touched base row (pruning
-      // proves untouched files hold no matching key, so touched-only
-      // is exact), first applicable not-matched clause
-      val insertClauseIdx = notMatched.zipWithIndex.foldRight(lit(-1)) {
-        case ((cl, i), els) =>
-          when(cl.condition.map(c => coalesce(c, lit(false)))
-            .getOrElse(lit(true)), lit(i)).otherwise(els)
-      }
+      val insertClauseIdx = firstHolding(notMatched.map(_.condition))
       def insertValueOf(c: String): Column =
         notMatched.zipWithIndex.foldRight(
           lit(null).cast(schema(c).dataType)) { case ((cl, i), els) =>
@@ -359,111 +369,223 @@ object MergeInto {
                 .cast(schema(c).dataType)).otherwise(els)
           }
         }
-      def insertsFrom(matchedKeys: DataFrame): DataFrame = resolved
-        .join(matchedKeys, keys, "left_anti")
-        .withColumn("__n", insertClauseIdx)
-        .where(col("__n") =!= -1)
-        .select(cols.map(c => insertValueOf(c).as(c)): _*)
-      val inserts =
-        if (notMatched.isEmpty) None
-        else Some(insertsFrom(base.select(keys.map(col): _*)))
+      val base = ManifestTable.scanWith(spark, dir, touched, schema,
+        head.dvs, head.renames)
 
-      // constraints check the CHANGED rows only (updates + inserts);
-      // pass-through rows conformed at their own commit
-      if (head.constraints.nonEmpty) {
-        val changedPred = (updateIdx.map(i => col("__m") === i) ++
-          bsUpdateIdx.map(i => col("__s") === i)).reduceOption(_ || _)
-        val updatedSlice = changedPred.map(p => joined.where(p)
-          .select(cols.map(c => valueOf(c).as(c)): _*))
-        (updatedSlice ++ inserts).reduceOption(_ unionByName _).foreach(
-          ManifestTable.enforce(_, head.constraints, "mergeInto"))
-      }
-
-      // INSERT-only merges (no matched/by-source clause, or nothing
-      // touched) stage just the new rows — no file rewrite; a merge
-      // with nothing to rewrite AND nothing to insert is a no-op
-      val outOpt: Option[DataFrame] =
-        if (singlePass)
-          Some(rewritten0.coalesce(math.max(touched.size, 1)))
-        else if (rewriteNeeded)
-          Some(inserts.fold(rewritten0)(rewritten0.unionByName(_))
-            .coalesce(math.max(touched.size, 1)))
-        else inserts
-      val removed = if (rewriteNeeded) touched.map(_.path).toSet
-        else Set.empty[String]
-      if (outOpt.isEmpty || (!rewriteNeeded && outOpt.get.isEmpty)) head
-      else {
-        val out = outOpt.get
-        val staged0 = ManifestTable.stage(spark, dir, out, head.statsCols,
-          head.partitionCols, head.bloomCols)
-        val staged = if (!singlePass) staged0 else {
-          // the rewrite write above completed the observation; a missing
-          // metric (AQE replanned an empty rewrite subtree and dropped
-          // the CollectMetricsExec — same seam as
-          // ManifestTable.observedRows) falls back to the key-column
-          // anti-join against the touched scan — correct, just paying
-          // the second scan this path exists to avoid
-          val insertsDf = mkObs.get.get("__mk") match {
-            case Some(s: scala.collection.Seq[_]) =>
-              singlePassMerges.incrementAndGet()
-              val keySchema = StructType(keys.map(k =>
-                StructField(k, schema(k).dataType)).toArray)
-              val rows = s.toSeq.map(_.asInstanceOf[Row])
-              import scala.jdk.CollectionConverters._
-              insertsFrom(broadcast(
-                spark.createDataFrame(rows.asJava, keySchema)))
-            case _ => insertsFrom(base.select(keys.map(col): _*))
-          }
-          staged0 ++ ManifestTable.stage(spark, dir, insertsDf,
-            head.statsCols, head.partitionCols, head.bloomCols)
-        }
-        // rebase conflict: a concurrently ADDED file conflicts unless
-        // PROVABLY disjoint from the source key range on some column
-        lazy val srcRanges: Seq[Option[(Any, Any)]] =
-          if (probed.isEmpty) Nil
-          else ManifestTable.observedMetrics(observed, obs) match {
-            // the probe pass already aggregated the ranges (zero extra
-            // jobs); null lo = empty source on that column
-            case Some(m) => probed.indices.map { j =>
-              m.get(s"lo$j") match {
-                case Some(null) | None => None
-                case Some(lo) => Some((lo, m(s"hi$j")))
+      if (replaceByKey) {
+        // the rows that land: each source row through its not-matched
+        // clauses, checked against what its matched clauses would do
+        val lands = col("__n") =!= -1
+        val updates = updateIdx.map(i => col("__m") === i)
+          .reduceOption(_ || _).getOrElse(lit(false))
+        val landing = resolved
+          .withColumn(SrcStruct, struct(srcCols.map(col): _*))
+          .withColumn("__m", clauseIdx)
+          .withColumn("__n", insertClauseIdx)
+          .where(when(col("__m") === -1 || updates =!= lands,
+            raise_error(concat(
+              lit("mergeInto: replace-by-key clauses disagree on key ("),
+              concat_ws(",", keys.map(c => col(c).cast("string")): _*),
+              lit(") — its outcome must not depend on whether it " +
+                "matched")))).otherwise(lands))
+          .select(cols.map(c => insertValueOf(c).as(c)): _*)
+        // only the NEW rows need checking — touched base rows conformed
+        // at their own commit and pass through byte-identical
+        ManifestTable.enforce(landing, head.constraints, operation)
+        // Rewrite = broadcast ANTI join (touched rows whose key appears
+        // in the source are dropped) ∪ the landing rows, coalesced back
+        // to touched-file granularity so a merge PRESERVES the table's
+        // file layout instead of splintering it
+        val rewritten = base
+          .join(maybeBroadcast(resolved.select(keys.map(col): _*)), keys,
+            "left_anti")
+          .unionByName(landing)
+          .coalesce(math.max(touched.size, 1))
+        commit(touched.map(_.path).toSet,
+          if (touched.isEmpty && srcRows == 0) Vector.empty
+          else stage(rewritten))
+      } else {
+        val srcKeyed = resolved.select(keys.map(col) ++ Seq(
+          struct(srcCols.map(col): _*).as(SrcStruct), col("__dup")): _*)
+        val isMatched = col(SrcStruct).isNotNull
+        val bsClauseIdx = firstHolding(notMatchedBySource.map(_.condition))
+        val bsDeleteIdx = notMatchedBySource.zipWithIndex.collect {
+          case (WhenNotMatchedBySource(Delete, _), i) => i }
+        val bsUpdateIdx = notMatchedBySource.zipWithIndex.collect {
+          case (WhenNotMatchedBySource(Update(_), _), i) => i }
+        def valueOf(c: String): Column = {
+          val afterBySource = notMatchedBySource.zipWithIndex
+            .foldRight(col(c)) { case ((cl, i), els) =>
+              cl.action match {
+                case Update(set) if set.contains(c) =>
+                  when(col("__s") === i,
+                    set(c).cast(schema(c).dataType)).otherwise(els)
+                case _ => els
               }
             }
-            case None =>
-              val aggs = probed.zipWithIndex.flatMap { case ((k, _, norm), j) =>
-                Seq(min(norm(col(k))).as(s"lo$j"), max(norm(col(k))).as(s"hi$j"))
-              }
-              val r = resolved.agg(aggs.head, aggs.tail: _*).head()
-              probed.indices.map { j =>
-                if (r.isNullAt(2 * j)) None
-                else Some((r.get(2 * j), r.get(2 * j + 1)))
-              }
-          }
-        // a concurrently added file also conflicts when a BY SOURCE
-        // clause may touch rows in it (unconditional ⇒ always)
-        val bySourceConflicts: FileEntry => Boolean =
-          if (notMatchedBySource.isEmpty) _ => false
-          else if (notMatchedBySource.exists(_.condition.isEmpty)) _ => true
-          else {
-            val e = org.apache.spark.sql.GraftSqlBridge.expr(bySourceOr.get)
-            f => ManifestTable.mayMatch(f, schema, e)
-          }
-        val conflicts: FileEntry => Boolean = f => bySourceConflicts(f) || {
-          if (probed.isEmpty) true
-          else if (srcRanges.forall(_.isEmpty)) false // empty source
-          else !probed.zipWithIndex.exists { case ((k, _, _), j) =>
-            (ManifestTable.fileBounds(f, schema, k), srcRanges(j)) match {
-              case (Some((mn, mx)), Some((lo, hi))) =>
-                ManifestTable.primLt(mx, lo) || ManifestTable.primLt(hi, mn)
-              case _ => false // unknown on this column: can't prove disjoint
+          matched.zipWithIndex.foldRight(afterBySource) { case ((cl, i), els) =>
+            cl.action match {
+              case UpdateAll =>
+                when(col("__m") === i,
+                  src(c).cast(schema(c).dataType)).otherwise(els)
+              case Update(set) if set.contains(c) =>
+                when(col("__m") === i,
+                  set(c).cast(schema(c).dataType)).otherwise(els)
+              case _ => els
             }
           }
         }
-        ManifestTable.commitRewrite(spark, dir, head, "merge-into",
-          removed, staged, conflicts, None,
-          schemaJson = if (newFields.isEmpty) None else Some(schema.json))
+        // cardinality guard rides the join: evaluated on every matched
+        // row, throws only when a duplicate source key actually matched
+        val guard = when(isMatched && col("__dup") > 1,
+          raise_error(concat(
+            lit("mergeInto: multiple source rows match target key ("),
+            concat_ws(",", keys.map(c => col(c).cast("string")): _*),
+            lit(") — deduplicate the source")))).otherwise(lit(true))
+        val joined0 = base.join(maybeBroadcast(srcKeyed), keys, "left")
+          .withColumn("__m", when(isMatched, clauseIdx).otherwise(lit(-1)))
+          .withColumn("__s", when(!isMatched, bsClauseIdx).otherwise(lit(-1)))
+          .where(guard)
+        // Single-pass rewrite+insert: the rewrite join above already
+        // reads every touched row, so the set of source keys that
+        // MATCHED rides the rewrite's own write job through a second
+        // observe (collect_set of the key tuple), and inserts are derived
+        // from the CACHED source anti-joined against that local key set —
+        // the touched files are never scanned a second time. Gated to
+        // constraint-free tables (enforcement must keep its
+        // nothing-staged-on-violation ordering, which needs the insert
+        // frame BEFORE staging) and to a key set Spark would broadcast:
+        // source rows × the key tuple's default size within
+        // spark.sql.autoBroadcastJoinThreshold (≤ 0 ⇒ never), since the
+        // collected set is broadcast right after. Past that the
+        // key-column anti-join against the touched scan stands in.
+        val rewriteNeeded = (matched.nonEmpty ||
+          notMatchedBySource.nonEmpty) && touched.nonEmpty
+        val keySchema = StructType(keys.map(schema(_)))
+        val broadcastBudget =
+          spark.sessionState.conf.autoBroadcastJoinThreshold
+        val singlePass = rewriteNeeded && notMatched.nonEmpty &&
+          head.constraints.isEmpty && srcRows <= MaxBroadcastSourceRows &&
+          broadcastBudget > 0 &&
+          srcRows * keySchema.defaultSize <= broadcastBudget
+        val mkObs = org.apache.spark.sql.Observation()
+        val joined = if (singlePass)
+          joined0.observe(mkObs, collect_set(when(isMatched,
+            struct(keys.map(col): _*))).as("__mk"))
+        else joined0
+        val allDeletes = deleteIdx.map(i => col("__m") === i) ++
+          bsDeleteIdx.map(i => col("__s") === i)
+        val rewritten0 = allDeletes.reduceOption(_ || _)
+          .fold(joined)(d => joined.where(!d))
+          .select(cols.map(c => valueOf(c).as(c)): _*)
+
+        // inserts: source rows matching NO touched base row (pruning
+        // proves untouched files hold no matching key, so touched-only
+        // is exact), first applicable not-matched clause
+        def insertsFrom(matchedKeys: DataFrame): DataFrame = resolved
+          .join(matchedKeys, keys, "left_anti")
+          .withColumn("__n", insertClauseIdx)
+          .where(col("__n") =!= -1)
+          .select(cols.map(c => insertValueOf(c).as(c)): _*)
+        val inserts =
+          if (notMatched.isEmpty) None
+          else Some(insertsFrom(base.select(keys.map(col): _*)))
+
+        // constraints check the CHANGED rows only (updates + inserts);
+        // pass-through rows conformed at their own commit
+        if (head.constraints.nonEmpty) {
+          val changedPred = (updateIdx.map(i => col("__m") === i) ++
+            bsUpdateIdx.map(i => col("__s") === i)).reduceOption(_ || _)
+          val updatedSlice = changedPred.map(p => joined.where(p)
+            .select(cols.map(c => valueOf(c).as(c)): _*))
+          (updatedSlice ++ inserts).reduceOption(_ unionByName _).foreach(
+            ManifestTable.enforce(_, head.constraints, "mergeInto"))
+        }
+
+        // INSERT-only merges (no matched/by-source clause, or nothing
+        // touched) stage just the new rows — no file rewrite; a merge
+        // with nothing to rewrite AND nothing to insert is a no-op
+        val outOpt: Option[DataFrame] =
+          if (singlePass)
+            Some(rewritten0.coalesce(math.max(touched.size, 1)))
+          else if (rewriteNeeded)
+            Some(inserts.fold(rewritten0)(rewritten0.unionByName(_))
+              .coalesce(math.max(touched.size, 1)))
+          else inserts
+        if (outOpt.isEmpty || (!rewriteNeeded && outOpt.get.isEmpty)) head
+        else {
+          val staged0 = stage(outOpt.get)
+          val staged = if (!singlePass) staged0 else {
+            // the rewrite write above completed the observation; a
+            // missing metric (AQE replanned an empty rewrite subtree and
+            // dropped the CollectMetricsExec — same seam as observedRows)
+            // falls back to the key-column anti-join against the touched
+            // scan — correct, just paying the second scan this path
+            // exists to avoid
+            val insertsDf = mkObs.get.get("__mk") match {
+              case Some(s: scala.collection.Seq[_]) =>
+                singlePassMerges.incrementAndGet()
+                val rows = s.toSeq.map(_.asInstanceOf[Row])
+                import scala.jdk.CollectionConverters._
+                insertsFrom(broadcast(
+                  spark.createDataFrame(rows.asJava, keySchema)))
+              case _ => insertsFrom(base.select(keys.map(col): _*))
+            }
+            staged0 ++ stage(insertsDf)
+          }
+          commit(if (rewriteNeeded) touched.map(_.path).toSet
+            else Set.empty[String], staged)
+        }
       }
     } finally cached.unpersist()
+  }
+
+  /** The merge source's row count, preferring the observe metric the
+    * pruning probe already paid for (one pass fills the cache AND
+    * answers the broadcast gate) over a separate count() job. The
+    * fallback is load-bearing, not defensive: when the probe's result
+    * is EMPTY, AQE replans the finished stage into an empty local
+    * relation, the CollectMetricsExec vanishes from the final adaptive
+    * plan, and the ObservationManager completes the observation with
+    * Row.empty — so an absent metric falls back to one count() over
+    * the ALREADY-CACHED source (the pre-observe cost, never worse). */
+  private def observedRows(observed: Boolean,
+      obs: org.apache.spark.sql.Observation, cached: DataFrame): Long =
+    observedMetrics(observed, obs).flatMap(_.get("rows")) match {
+      case Some(n: Long) => n
+      case _ => cached.count()
+    }
+
+  /** The probe's observe metrics, or None when the observation never
+    * fired / completed empty (probe-less path, or AQE replanned the
+    * empty probe into a local relation and dropped CollectMetricsExec —
+    * see [[observedRows]]). Blocks until the listener fires when the
+    * probe DID run. */
+  private def observedMetrics(observed: Boolean,
+      obs: org.apache.spark.sql.Observation): Option[Map[String, Any]] =
+    if (!observed) None
+    else Some(obs.get).filter(_.get("rows").exists(_.isInstanceOf[Long]))
+
+  /** Probe-side type plan for a merge key: the Spark column type the
+    * interval frame uses, and how to normalize the source key onto it.
+    * None ⇒ the key type can't be probed (every stat-bearing file is
+    * treated as touched — correct, just unpruned). */
+  private def keyProbe(dt: DataType): Option[(DataType, Column => Column)] =
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some((LongType, _.cast("long")))
+      case FloatType | DoubleType => Some((DoubleType, _.cast("double")))
+      case StringType => Some((StringType, identity[Column] _))
+      case DateType => Some((LongType, c => unix_date(c).cast("long")))
+      case TimestampType => Some((LongType, c => unix_micros(c)))
+      case _ => None
+    }
+
+  /** Pruning primitive → external row value for the interval frame. */
+  private def primExternal(v: Any, t: DataType): Any = (v, t) match {
+    case (x: Long, LongType) => x
+    case (x: Double, DoubleType) => x
+    case (x: String, StringType) => x
+    case _ => sys.error(s"merge probe: $v is not a $t")
   }
 }

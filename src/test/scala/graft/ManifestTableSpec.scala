@@ -1292,8 +1292,8 @@ class ManifestTableSpec extends SparkSuite {
       Seq((100L, "HIGH")).toDF("k", "v"), "k")
     // stale merge on the LOW range: removed file still live, the
     // concurrent merge's staged file is bounds-disjoint ⇒ rebase
-    val snap = ManifestTable.mergeImpl(spark, dir, h0,
-      Seq((1L, "LOW")).toDF("k", "v"), "k", None, None, "merge", None)
+    val snap = ManifestTable.mergeAt(spark, dir, h0.version,
+      Seq((1L, "LOW")).toDF("k", "v"), "k")
     assert(snap.parent == h0.version + 1)
     val got = content(dir)
     assert(got((1L, "LOW")) && got((100L, "HIGH")) && got((2L, "low")))
@@ -1302,8 +1302,8 @@ class ManifestTableSpec extends SparkSuite {
     val h1 = ManifestTable.snapshot(spark, dir)
     ManifestTable.merge(spark, dir, Seq((2L, "TWO")).toDF("k", "v"), "k")
     val e = intercept[ManifestTable.ConcurrentCommitException] {
-      ManifestTable.mergeImpl(spark, dir, h1,
-        Seq((3L, "THREE")).toDF("k", "v"), "k", None, None, "merge", None)
+      ManifestTable.mergeAt(spark, dir, h1.version,
+        Seq((3L, "THREE")).toDF("k", "v"), "k")
     }
     assert(e.getMessage.contains("conflict"))
   }

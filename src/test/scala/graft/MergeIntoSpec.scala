@@ -236,4 +236,32 @@ class MergeIntoSpec extends SparkSuite {
       notMatchedBySource = Seq(WhenNotMatchedBySource(Delete)))
     assert(rows(dir2) == Set((1L, 0L, "one"), (2L, 1L, "two")))
   }
+
+  test("the single-pass matched-key set is bounded by Spark's broadcast " +
+    "threshold: lowered or disabled in-session, the merge takes the " +
+    "key-column anti-join with the same result") {
+    import spark.implicits._
+    val source = Seq((3L, 0L, "upd"), (7L, 1L, "upd"), (50L, 0L, "new"))
+      .toDF("k1", "k2", "v")
+    def run(threshold: Option[String]): (Long, Seq[(Long, Long, String)]) = {
+      val dir = freshDir("sp_budget")
+      seed(dir)
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val before = MergeInto.singlePassMerges.get()
+      threshold.foreach(spark.conf.set(key, _))
+      try MergeInto(spark, dir, source, Seq("k1", "k2"),
+        matched = Seq(WhenMatched(UpdateAll)),
+        notMatched = Seq(WhenNotMatched(InsertAll)))
+      finally spark.conf.unset(key)
+      (MergeInto.singlePassMerges.get() - before, rows(dir).toSeq.sorted)
+    }
+    val (fast, expect) = run(None)
+    assert(fast == 1L, "a default-budget merge must take the single pass")
+    // 3 source rows × 16-byte (k1, k2) tuples = 48 bytes: 47 is too small
+    Seq("47", "-1").foreach { t =>
+      val (passes, got) = run(Some(t))
+      assert(passes == 0L, s"threshold $t must not collect the key set")
+      assert(got == expect, s"threshold $t changed the merge result")
+    }
+  }
 }

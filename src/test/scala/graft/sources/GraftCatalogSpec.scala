@@ -365,4 +365,37 @@ class GraftCatalogSpec extends SparkSuite {
     assert(d1.getAs[Long]("replay_len") == 0L ||
       d1.getAs[Long]("replay_len") == 1L)
   }
+
+  test("a staged CTAS that loses publishCreate to a table that appeared " +
+    "first aborts by deleting exactly its staged commit dir, also when " +
+    "it staged no rows") {
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import org.apache.spark.sql.connector.write.V1Write
+    wh
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.race")
+    val cat = spark.sessionState.catalogManager.catalog("lake")
+      .asInstanceOf[GraftCatalog]
+    Seq(50L, 0L).foreach { n =>
+      val staged = cat.stageCreate(Identifier.of(Array("race"), s"t$n"),
+        spark.range(1).selectExpr("id AS k").schema, Array.empty,
+        new java.util.HashMap[String, String]())
+      // the CTAS write stages its files (no log record yet) ...
+      staged.asInstanceOf[GraftStagedTable].newWriteBuilder(null).build()
+        .asInstanceOf[V1Write].toInsertableRelation
+        .insert(spark.range(0, n).selectExpr("id AS k"), overwrite = false)
+      // ... a concurrent writer creates the table at the same path first
+      val dir = s"$wh/race/t$n"
+      val winner = ManifestTable.create(spark, dir,
+        spark.range(100, 103).selectExpr("id AS k"))
+      intercept[IllegalArgumentException](staged.commitStagedChanges())
+      staged.abortStagedChanges()
+      // the only commit dirs left under the table are the winner's
+      val root = new org.apache.hadoop.fs.Path(dir, "data")
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val left = fs.listStatus(root).map(_.getPath.getName).toSet
+      assert(left == winner.files.map(_.path.split('/')(1)).toSet,
+        s"staged data of a $n-row CTAS survived the abort: $left")
+      assert(ManifestTable.read(spark, dir).count() == 3L)
+    }
+  }
 }
